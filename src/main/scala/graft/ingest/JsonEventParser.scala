@@ -2,7 +2,7 @@ package graft.ingest
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 import com.fasterxml.jackson.core.io.JsonStringEncoder
-import graft.schema.{CollectionId, FieldNames, FieldType}
+import graft.schema.{CollectionId, EventSchema, FieldNames, FieldType}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -38,7 +38,8 @@ final class MalformedEventException(msg: String, cause: Throwable = null)
 /** Minimal JSON value tree built via Jackson *streaming* parse with the
   * reference's duplicate-key semantics: first value wins, later duplicates
   * are `skipChildren()`ed (FabricJsonDeserializer.java:249-256). Number
-  * lexemes are preserved for loss-free re-encoding of nested values.
+  * lexemes are preserved for loss-free re-encoding of nested values. The
+  * event kernels read only array and object property values into it.
   */
 object JVal {
   sealed trait JVal extends Serializable
@@ -118,6 +119,18 @@ object JVal {
   * (FabricJsonDeserializer.java:313-602) are implemented here and driven
   * from `mapPartitions`.
   *
+  * Both per-record kernels are one Jackson token walk over the envelope
+  * (`EnvelopeWalk`), with no per-record value tree: scalars are typed or
+  * coerced straight from their token, and only array and object values are
+  * read into a [[JVal]] for [[inferValue]] / [[coerce]].
+  *  - inference: an [[InferFold]] per partition folds each event's fields
+  *    into one `name → type` map per collection; schemas are built once
+  *    per partition, not per event.
+  *  - parse: a [[ParsePlan]] per partition and schema holds the column
+  *    index, types and `_time` flags; properties outside the schema are
+  *    skipped without allocating.
+  * [[inferEvent]] / [[parseEvent]] run the same walks for one record.
+  *
   * Inference rules (getTypeForUnknown, ref :497-602):
   *  - any JSON number → DOUBLE (the load-bearing default)
   *  - string → DATE if `yyyy-MM-dd`, TIMESTAMP if timestamp-like, else STRING
@@ -148,48 +161,139 @@ object JsonEventParser {
 
   // ------------------------------------------------------------- envelope
 
-  /** Full parse of the envelope: routing id + the properties object. */
-  def parseEnvelope(json: String, dialect: JsonDialect): Option[(CollectionId, JObj)] =
-    try {
-      val p = factory.createParser(json)
-      try {
-        if (p.nextToken() != JsonToken.START_OBJECT) return None
-        val root = read(p).asInstanceOf[JObj]
-        envelopeOf(root, dialect)
-      } finally p.close()
-    } catch { case _: Exception => None }
+  /** First occurrence of a property name within one record: a stamp per
+    * name, so the steady state (the same names record after record)
+    * allocates nothing. Bounded: the table is dropped at a record boundary
+    * once it holds more than 4096 distinct names.
+    */
+  private final class FirstSeen {
+    private[this] val stamps = new java.util.HashMap[String, Array[Int]]()
+    private[this] var record = 0
 
-  private def envelopeOf(root: JObj, dialect: JsonDialect): Option[(CollectionId, JObj)] =
-    dialect match {
-      case JsonDialect.Fabric =>
-        root.toMap.get("data") match {
-          case Some(data: JObj) =>
-            (data.toMap.get("_project"), data.toMap.get("_collection")) match {
-              case (Some(JStr(proj)), Some(JStr(coll)))
-                  if CollectionId.isValid(proj, coll) =>
-                Some((CollectionId.normalize(proj, coll), data))
-              case _ => None
-            }
-          case _ => None
-        }
-      case JsonDialect.Rakam =>
-        val allowed = Set("project", "collection", "properties", "api")
-        if (root.fields.exists { case (k, _) => !allowed(k) })
-          throw new MalformedEventException("unknown top-level field")
-        (root.toMap.get("project"), root.toMap.get("collection"),
-         root.toMap.get("properties")) match {
-          case (Some(JStr(proj)), Some(JStr(coll)), Some(props: JObj))
-              if CollectionId.isValid(proj, coll) =>
-            Some((CollectionId.normalize(proj, coll), props))
-          case _ => None
-        }
+    def nextRecord(): Unit = {
+      record += 1
+      if (stamps.size > 4096) stamps.clear()
     }
+
+    /** True for the first occurrence of `name` in the current record. */
+    def first(name: String): Boolean = {
+      val s = stamps.get(name)
+      if (s == null) { stamps.put(name, Array(record)); true }
+      else if (s(0) == record) false
+      else { s(0) = record; true }
+    }
+  }
+
+  /** One Jackson token walk over an envelope, shared by inference and
+    * parse. The walk reads the whole root object (so malformed JSON anywhere
+    * in it skips the record, as a full read would), applies the dialect's
+    * envelope rules, and hands every FIRST occurrence of a property of the
+    * event object (`data` / `properties`) to [[field]] with the parser on
+    * the value token; later duplicates are `skipChildren()`ed.
+    *
+    *  - Fabric: the first `data` key must hold an object; its first
+    *    `_project`/`_collection` must be strings and route the record.
+    *  - Rakam: the first `project`/`collection` (strings) and `properties`
+    *    (object) route the record; any top-level key outside
+    *    `project, collection, properties, api` rejects it
+    *    (RakamJsonDeserializer.java:156-157).
+    */
+  private abstract class EnvelopeWalk(dialect: JsonDialect) {
+    private[this] val seen = new FirstSeen
+    private[this] var project: String = _
+    private[this] var collection: String = _
+
+    /** Called once per record before the walk. */
+    protected def begin(): Unit
+
+    /** Consume the value under the parser: read a scalar or leave it, read
+      * or `skipChildren()` a container.
+      */
+    protected def field(name: String, t: JsonToken, p: JsonParser): Unit
+
+    /** Routing id of the last record [[walk]] accepted. */
+    final def id: CollectionId = CollectionId.normalize(project, collection)
+
+    /** Walk one envelope; false = malformed or unroutable (record skipped). */
+    final def walk(json: String): Boolean =
+      try {
+        val p = factory.createParser(json)
+        try {
+          project = null; collection = null
+          seen.nextRecord(); begin()
+          p.nextToken() == JsonToken.START_OBJECT && (dialect match {
+            case JsonDialect.Fabric => fabric(p)
+            case JsonDialect.Rakam  => rakam(p)
+          }) && CollectionId.isValid(project, collection)
+        } finally p.close()
+      } catch { case _: Exception => false }
+
+    private def nextKey(p: JsonParser): Boolean = p.nextToken() match {
+      case JsonToken.END_OBJECT => false
+      case JsonToken.FIELD_NAME => true
+      case t => throw new MalformedEventException(s"unexpected token $t")
+    }
+
+    private def stringOrSkip(t: JsonToken, p: JsonParser): String =
+      if (t == JsonToken.VALUE_STRING) p.getText else { p.skipChildren(); null }
+
+    private def fabric(p: JsonParser): Boolean = {
+      var data = false
+      while (nextKey(p)) {
+        val name = p.currentName()
+        val t = p.nextToken()
+        if (!data && name == "data") {
+          data = true
+          if (t != JsonToken.START_OBJECT) return false
+          event(p, routed = true)
+        } else p.skipChildren()
+      }
+      data
+    }
+
+    private def rakam(p: JsonParser): Boolean = {
+      var proj = false; var coll = false; var props = false
+      while (nextKey(p)) {
+        val name = p.currentName()
+        val t = p.nextToken()
+        name match {
+          case "project" if !proj => proj = true; project = stringOrSkip(t, p)
+          case "collection" if !coll => coll = true; collection = stringOrSkip(t, p)
+          case "properties" if !props =>
+            props = true
+            if (t != JsonToken.START_OBJECT) return false
+            event(p, routed = false)
+          case "project" | "collection" | "properties" | "api" => p.skipChildren()
+          case _ => return false // unknown top-level field
+        }
+      }
+      props
+    }
+
+    /** The event object; `routed` = it carries `_project`/`_collection`. */
+    private def event(p: JsonParser, routed: Boolean): Unit =
+      while (nextKey(p)) {
+        val name = p.currentName()
+        val t = p.nextToken()
+        if (!seen.first(name)) p.skipChildren() // duplicate key: first wins
+        else {
+          if (routed) {
+            if (name == "_project")
+              project = if (t == JsonToken.VALUE_STRING) p.getText else null
+            else if (name == "_collection")
+              collection = if (t == JsonToken.VALUE_STRING) p.getText else null
+          }
+          field(name, t, p)
+        }
+      }
+  }
 
   /** Cheap routing extract: streams tokens and early-exits once project and
     * collection are both seen (the reference's two-phase parse pattern —
     * TokenBuffer routing pre-pass / DecoupleMessage,
     * FabricJsonDeserializer.java:105-179, KafkaDecoupleMessage.java:46-114).
-    * Unlike [[parseEnvelope]] this never materializes property values.
+    * Unlike the walk behind [[inferEvent]]/[[parseEvent]], it reads no
+    * property value.
     */
   def routing(json: String, dialect: JsonDialect): Option[CollectionId] =
     try {
@@ -295,25 +399,110 @@ object JsonEventParser {
 
   // -------------------------------------------------------------- inference
 
+  /** Inference walk: the record's first-wins fields in document order, as
+    * (name, type) pairs in reusable buffers. Scalars are typed from their
+    * token; only arrays and objects are read into a [[JVal]] for
+    * [[inferValue]]. Reserved fields and untyped values (null, empty
+    * containers) produce no pair.
+    */
+  private final class InferWalk(dialect: JsonDialect, names: FieldNames)
+      extends EnvelopeWalk(dialect) {
+    var size = 0
+    var fieldNames = new Array[String](32)
+    var fieldTypes = new Array[FieldType](32)
+
+    protected def begin(): Unit = size = 0
+
+    protected def field(name: String, t: JsonToken, p: JsonParser): Unit =
+      if (isReserved(name, names)) p.skipChildren()
+      else if (name == names.timeField) { p.skipChildren(); add(name, FieldType.FTimestamp) }
+      else t match {
+        case JsonToken.VALUE_NULL => ()
+        case JsonToken.VALUE_NUMBER_INT | JsonToken.VALUE_NUMBER_FLOAT => add(name, FieldType.FDouble)
+        case JsonToken.VALUE_TRUE | JsonToken.VALUE_FALSE => add(name, FieldType.FBoolean)
+        case JsonToken.VALUE_STRING => add(name, stringType(p.getText))
+        case _ => inferValue(read(p), name, names).foreach(add(name, _))
+      }
+
+    private def add(name: String, ft: FieldType): Unit = {
+      if (size == fieldNames.length) {
+        fieldNames = java.util.Arrays.copyOf(fieldNames, size * 2)
+        fieldTypes = java.util.Arrays.copyOf(fieldTypes, size * 2)
+      }
+      fieldNames(size) = name
+      fieldTypes(size) = ft
+      size += 1
+    }
+  }
+
   /** Infer the field types of one event. Returns the routing id plus fields
     * in document order (duplicates: first wins; null/empty: skipped).
     * Routing/reserved fields are excluded from the data columns.
     */
   def inferEvent(json: String, dialect: JsonDialect, names: FieldNames)
-      : Option[(CollectionId, mutable.LinkedHashMap[String, FieldType])] =
-    try {
-      parseEnvelope(json, dialect).map { case (id, data) =>
-        val out = mutable.LinkedHashMap.empty[String, FieldType]
-        data.fields.foreach { case (name, v) =>
-          if (!isReserved(name, names) && !out.contains(name))
-            inferValue(v, name, names).foreach(ft => out += name -> ft)
-        }
-        (id, out)
+      : Option[(CollectionId, mutable.LinkedHashMap[String, FieldType])] = {
+    val w = new InferWalk(dialect, names)
+    if (!w.walk(json)) None
+    else {
+      val out = mutable.LinkedHashMap.empty[String, FieldType]
+      var i = 0
+      while (i < w.size) { out += w.fieldNames(i) -> w.fieldTypes(i); i += 1 }
+      Some((w.id, out))
+    }
+  }
+
+  /** One partition's inference: every event's fields folded, in document
+    * order, into one `name → type` map per collection — a new name appends,
+    * a known one widens with [[EventSchema.widen]]. That is
+    * `EventSchema.evolve(current, event)` applied field by field, without
+    * building a schema per event; [[result]] builds each collection's
+    * `StructType` once.
+    */
+  final class InferFold(dialect: JsonDialect, names: FieldNames) {
+    private final class Acc {
+      val fields = new java.util.LinkedHashMap[String, DataType]()
+      var rows = 0L
+    }
+    private[this] val walk = new InferWalk(dialect, names)
+    private[this] val accs = new java.util.LinkedHashMap[CollectionId, Acc]()
+
+    /** Fold one event in; malformed or unroutable events are skipped. */
+    def add(json: String): Unit = if (walk.walk(json)) {
+      val id = walk.id
+      var acc = accs.get(id)
+      if (acc == null) { acc = new Acc; accs.put(id, acc) }
+      acc.rows += 1
+      var i = 0
+      while (i < walk.size) {
+        val name = walk.fieldNames(i)
+        val dt = walk.fieldTypes(i).sparkType
+        val cur = acc.fields.get(name)
+        if (cur == null) acc.fields.put(name, dt)
+        else if (cur != dt) acc.fields.put(name, EventSchema.widen(cur, dt))
+        i += 1
       }
-    } catch { case _: Exception => None }
+    }
+
+    /** Per collection, in first-seen order: observed schema and row count. */
+    def result: Iterator[(CollectionId, StructType, Long)] = {
+      import scala.jdk.CollectionConverters._
+      accs.entrySet.iterator.asScala.map { e =>
+        val fields = e.getValue.fields.entrySet.iterator.asScala.map { f =>
+          StructField(f.getKey, f.getValue, nullable = true)
+        }.toArray
+        (e.getKey, StructType(fields), e.getValue.rows)
+      }
+    }
+  }
 
   private def isReserved(name: String, names: FieldNames): Boolean =
     name == "_project" || name == "_collection" || name == names.checkpointField
+
+  /** String sniffing: DATE if `yyyy-MM-dd`, TIMESTAMP if timestamp-like. */
+  private def stringType(s: String): FieldType =
+    if (looksLikeDate(s)) FieldType.FDate
+    else if (looksLikeTimestamp(s)) FieldType.FTimestamp
+    else FieldType.FString
 
   /** getTypeForUnknown (ref :497-602). None = do not create a column. */
   def inferValue(v: JVal, fieldName: String, names: FieldNames): Option[FieldType] = {
@@ -322,10 +511,7 @@ object JsonEventParser {
       case JNull    => None
       case _: JNum  => Some(FieldType.FDouble) // ints infer DOUBLE, ref :529-531
       case _: JBool => Some(FieldType.FBoolean)
-      case JStr(s) =>
-        if (looksLikeDate(s)) Some(FieldType.FDate)
-        else if (looksLikeTimestamp(s)) Some(FieldType.FTimestamp)
-        else Some(FieldType.FString)
+      case JStr(s)  => Some(stringType(s))
       case JArr(items) =>
         if (items.isEmpty) None // empty array: no column, ref :535-540
         else items.head match {
@@ -352,36 +538,77 @@ object JsonEventParser {
 
   // --------------------------------------------------------------- coercion
 
+  /** A schema compiled for the parse walk: name → column index, each
+    * column's [[FieldType]] and `_time` flag, resolved once per partition.
+    * [[parse]] writes each first-wins property straight from its token into
+    * a fresh value array; properties outside the schema are
+    * `skipChildren()`ed without allocating. `tail` extra trailing slots are
+    * left for the caller (the cohort parse appends the routing columns).
+    */
+  final class ParsePlan(val schema: StructType, dialect: JsonDialect, names: FieldNames,
+                        tail: Int = 0) {
+    private[this] val width = schema.length
+    private[this] val index = new java.util.HashMap[String, Integer]()
+    schema.fieldNames.zipWithIndex.foreach { case (n, i) => index.put(n, i) }
+    // null = a type the parser cannot fill: a record carrying that field is
+    // skipped, as per-record resolution skipped it
+    private[this] val types: Array[FieldType] = schema.fields.map { f =>
+      try FieldType.fromSpark(f.dataType) catch { case _: IllegalArgumentException => null }
+    }
+    private[this] val isTime: Array[Boolean] = schema.fields.map(_.name == names.timeField)
+
+    private final class ParseWalk extends EnvelopeWalk(dialect) {
+      var values: Array[Any] = _
+      protected def begin(): Unit = values = new Array[Any](width + tail)
+      protected def field(name: String, t: JsonToken, p: JsonParser): Unit = {
+        val i = index.get(name)
+        if (i == null) p.skipChildren()
+        else {
+          val ft = types(i)
+          if (ft == null) throw new MalformedEventException(s"unsupported column type for $name")
+          values(i) = coerceToken(t, p, ft, isTime(i), dialect)
+        }
+      }
+    }
+    private[this] val walk = new ParseWalk
+
+    /** Values aligned to `schema` (missing fields null), or null when the
+      * record is skipped: malformed, unroutable, or a type mismatch.
+      */
+    def parse(json: String): Array[Any] = if (walk.walk(json)) walk.values else null
+
+    /** Routing id of the last record [[parse]] accepted. */
+    def id: CollectionId = walk.id
+  }
+
   /** Parse one event against a fixed schema; values aligned to `schema`
     * field order, missing fields null. Returns None for malformed records or
     * scalar type mismatches (record-skip semantics, ref
-    * JsonMessageEventTransformer.java:50-60).
+    * JsonMessageEventTransformer.java:50-60). Streaming callers compile a
+    * [[ParsePlan]] once per partition instead.
     */
   def parseEvent(json: String, dialect: JsonDialect, schema: StructType,
-                 names: FieldNames): Option[(CollectionId, Row)] =
-    try {
-      parseEnvelope(json, dialect).flatMap { case (id, data) =>
-        val values = new Array[Any](schema.length)
-        val idx = fieldIndex(schema)
-        data.fields.foreach { case (name, v) =>
-          idx.get(name) match {
-            case Some(i) =>
-              values(i) = coerce(v, FieldType.fromSpark(schema(i).dataType),
-                                 isTime = schema(i).name == names.timeField, dialect)
-            case None => ()
-          }
-        }
-        Some((id, new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(values, schema)))
-      }
-    } catch {
-      case _: MalformedEventException => None
-      case _: Exception => None
-    }
+                 names: FieldNames): Option[(CollectionId, Row)] = {
+    val plan = new ParsePlan(schema, dialect, names)
+    val values = plan.parse(json)
+    if (values == null) None
+    else Some((plan.id,
+      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(values, schema)))
+  }
 
-  // per-schema field index, hoisted across records within a partition.
-  private val indexCache = new java.util.concurrent.ConcurrentHashMap[StructType, Map[String, Int]]()
-  private def fieldIndex(schema: StructType): Map[String, Int] =
-    indexCache.computeIfAbsent(schema, s => s.fieldNames.zipWithIndex.toMap)
+  /** [[coerce]] of the value under the parser: scalars straight from their
+    * token, containers through a [[JVal]] read.
+    */
+  private def coerceToken(t: JsonToken, p: JsonParser, target: FieldType, isTime: Boolean,
+                          dialect: JsonDialect): Any = t match {
+    case JsonToken.VALUE_NULL => null
+    case JsonToken.VALUE_STRING => coerceString(p.getText, target, isTime)
+    case JsonToken.VALUE_NUMBER_INT | JsonToken.VALUE_NUMBER_FLOAT =>
+      coerceNumber(p.getText, target, isTime, dialect)
+    case JsonToken.VALUE_TRUE => coerceBoolean(b = true, target)
+    case JsonToken.VALUE_FALSE => coerceBoolean(b = false, target)
+    case _ => coerce(read(p), target, isTime, dialect)
+  }
 
   /** getValue (ref :313-495) — faithful to the reference's leniency model:
     *
@@ -401,72 +628,14 @@ object JsonEventParser {
     * and parses `LocalTime` strings to seconds-of-day (the reference's
     * `LocalTime.getSecond()` keeps only the seconds-of-minute component).
     */
-  def coerce(v: JVal, target: FieldType, isTime: Boolean, dialect: JsonDialect): Any = {
-    if (v == JNull) return null
-    target match {
-      case FieldType.FString => v match {
-        case JStr(s)  => truncate(s) // ref :325-328
-        case JNum(t)  => truncate(t)
-        case JBool(b) => b.toString
-        case c        => JVal.encode(c) // container → JSON-encoded, ref :488-490
-      }
-      case FieldType.FBoolean => v match {
-        case JBool(b) => java.lang.Boolean.valueOf(b)
-        case JNum(t)  => java.lang.Boolean.valueOf(asLongLenient(t) != 0L)
-        case JStr(s)  => java.lang.Boolean.valueOf(s.trim.equalsIgnoreCase("true"))
-        case _        => null
-      }
-      case FieldType.FDouble => v match {
-        case n: JNum  => java.lang.Double.valueOf(n.toDouble)
-        case JStr(s)  => java.lang.Double.valueOf(asDoubleLenient(s))
-        case JBool(b) => java.lang.Double.valueOf(if (b) 1.0 else 0.0)
-        case _        => null
-      }
-      case FieldType.FLong => v match {
-        case n: JNum  => java.lang.Long.valueOf(n.toLong)
-        case JStr(s)  => java.lang.Long.valueOf(asLongLenient(s))
-        case JBool(b) => java.lang.Long.valueOf(if (b) 1L else 0L)
-        case _        => null
-      }
-      case FieldType.FInteger => v match {
-        case n: JNum  => java.lang.Integer.valueOf(n.toLong.toInt)
-        case JStr(s)  => java.lang.Integer.valueOf(asLongLenient(s).toInt)
-        case JBool(b) => java.lang.Integer.valueOf(if (b) 1 else 0)
-        case _        => null
-      }
-      case FieldType.FTime => v match {
-        case n: JNum => java.lang.Integer.valueOf(n.toLong.toInt) // seconds-of-day
-        case JStr(s) =>
-          try java.lang.Integer.valueOf(java.time.LocalTime.parse(s).toSecondOfDay)
-          catch { case _: Exception => null }
-        case _ => null
-      }
-      case FieldType.FDecimal => v match {
-        case JNum(t) => new java.math.BigDecimal(t)
-        case JStr(s) => try new java.math.BigDecimal(s.trim)
-                        catch { case _: Exception => null }
-        case _       => null
-      }
-      case FieldType.FDate => v match {
-        case JStr(s) => parseDate(s).orNull // un-parseable → null (ref :356-372)
-        case _       => null // numeric → null (ref :360-362)
-      }
-      case FieldType.FTimestamp => v match {
-        case n: JNum =>
-          // Fabric: epoch millis accepted; Rakam: numeric timestamps → null
-          // except for the canonical `_time` field (ref :373-390 vs Rakam :363-377)
-          if (dialect.numericTimestamps || isTime)
-            java.sql.Timestamp.from(Instant.ofEpochMilli(n.toLong))
-          else null
-        case JStr(s) => parseTimestamp(s).orNull
-        case _       => null
-      }
-      case FieldType.FBinary => v match {
-        case JStr(s) => try java.util.Base64.getDecoder.decode(s)
-                        catch { case _: Exception => null }
-        case _       => null
-      }
-      case FieldType.FArray(elem) => v match {
+  def coerce(v: JVal, target: FieldType, isTime: Boolean, dialect: JsonDialect): Any = v match {
+    case JNull    => null
+    case JStr(s)  => coerceString(s, target, isTime)
+    case JNum(t)  => coerceNumber(t, target, isTime, dialect)
+    case JBool(b) => coerceBoolean(b, target)
+    case c => target match {
+      case FieldType.FString => JVal.encode(c) // container → JSON-encoded, ref :488-490
+      case FieldType.FArray(elem) => c match {
         case JArr(items) =>
           items.map {
             case JNull => null
@@ -478,7 +647,7 @@ object JsonEventParser {
           }
         case _ => null // non-array for ARRAY column → null (ref :457-462)
       }
-      case FieldType.FMap(valueT) => v match {
+      case FieldType.FMap(valueT) => c match {
         case JObj(fields) => // key dedup first-wins already applied by JVal.read
           fields.map { case (k, mv) =>
             val coerced = mv match {
@@ -493,8 +662,60 @@ object JsonEventParser {
           }.toMap
         case _ => null // non-object for MAP column → null (ref :404-407)
       }
+      case _ => null // container in any other scalar column
     }
   }
+
+  private def coerceString(s: String, target: FieldType, isTime: Boolean): Any = target match {
+    case FieldType.FString    => truncate(s) // ref :325-328
+    case FieldType.FBoolean   => java.lang.Boolean.valueOf(s.trim.equalsIgnoreCase("true"))
+    case FieldType.FDouble    => java.lang.Double.valueOf(asDoubleLenient(s))
+    case FieldType.FLong      => java.lang.Long.valueOf(asLongLenient(s))
+    case FieldType.FInteger   => java.lang.Integer.valueOf(asLongLenient(s).toInt)
+    case FieldType.FTime =>
+      try java.lang.Integer.valueOf(java.time.LocalTime.parse(s).toSecondOfDay)
+      catch { case _: Exception => null }
+    case FieldType.FDecimal =>
+      try new java.math.BigDecimal(s.trim) catch { case _: Exception => null }
+    case FieldType.FDate      => parseDate(s).orNull // un-parseable → null (ref :356-372)
+    case FieldType.FTimestamp => parseTimestamp(s).orNull
+    case FieldType.FBinary =>
+      try java.util.Base64.getDecoder.decode(s) catch { case _: Exception => null }
+    case _ => null // scalar in an ARRAY/MAP column
+  }
+
+  /** `text` is the number's JSON lexeme. */
+  private def coerceNumber(text: String, target: FieldType, isTime: Boolean,
+                           dialect: JsonDialect): Any = target match {
+    case FieldType.FString   => truncate(text)
+    case FieldType.FBoolean  => java.lang.Boolean.valueOf(asLongLenient(text) != 0L)
+    case FieldType.FDouble   => java.lang.Double.valueOf(java.lang.Double.parseDouble(text))
+    case FieldType.FLong     => java.lang.Long.valueOf(numberToLong(text))
+    case FieldType.FInteger  => java.lang.Integer.valueOf(numberToLong(text).toInt)
+    case FieldType.FTime     => java.lang.Integer.valueOf(numberToLong(text).toInt) // seconds-of-day
+    case FieldType.FDecimal  => new java.math.BigDecimal(text)
+    case FieldType.FTimestamp =>
+      // Fabric: epoch millis accepted; Rakam: numeric timestamps → null
+      // except for the canonical `_time` field (ref :373-390 vs Rakam :363-377)
+      if (dialect.numericTimestamps || isTime)
+        java.sql.Timestamp.from(Instant.ofEpochMilli(numberToLong(text)))
+      else null
+    case _ => null // numeric DATE → null (ref :360-362); BINARY, ARRAY, MAP
+  }
+
+  private def coerceBoolean(b: Boolean, target: FieldType): Any = target match {
+    case FieldType.FString  => if (b) "true" else "false"
+    case FieldType.FBoolean => java.lang.Boolean.valueOf(b)
+    case FieldType.FDouble  => java.lang.Double.valueOf(if (b) 1.0 else 0.0)
+    case FieldType.FLong    => java.lang.Long.valueOf(if (b) 1L else 0L)
+    case FieldType.FInteger => java.lang.Integer.valueOf(if (b) 1 else 0)
+    case _                  => null
+  }
+
+  /** A JSON number lexeme as a long: integral parse, else double-truncation. */
+  private def numberToLong(text: String): Long =
+    try java.lang.Long.parseLong(text)
+    catch { case _: NumberFormatException => java.lang.Double.parseDouble(text).toLong }
 
   /** Jackson `NumberInput.parseAsLong` semantics: integral parse, fall back
     * to double-truncation, then 0.
@@ -520,8 +741,12 @@ object JsonEventParser {
 
   def looksLikeDate(s: String): Boolean = parseDate(s).isDefined
 
+  /** ISO `yyyy-MM-dd` only: ten characters with the dashes at 4 and 7 (the
+    * shape check spares `LocalDate.parse` — and its exception — on the
+    * ten-character strings that cannot be dates).
+    */
   def parseDate(s: String): Option[java.sql.Date] =
-    if (s.length != 10) None
+    if (s.length != 10 || s.charAt(4) != '-' || s.charAt(7) != '-') None
     else try Some(java.sql.Date.valueOf(LocalDate.parse(s)))
     catch { case _: Exception => None }
 

@@ -2,6 +2,7 @@ package graft.ingest
 
 import graft.schema.{CollectionId, EventSchema, FieldNames}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,16 +12,19 @@ import org.apache.spark.sql.types._
   * reference evolves schemas mid-batch (FabricJsonDeserializer.java:266-301).
   * The Spark-native resolution (SURVEY.md §7.3) is:
   *
-  *   pass 1  INFER  — one distributed sweep: per-partition type inference
-  *                    (tiny per-collection schemas cross the wire, never data),
+  *   pass 1  INFER  — one distributed sweep: each partition folds every
+  *                    event's token walk into one `name → type` map per
+  *                    collection (`JsonEventParser.InferFold`); tiny
+  *                    per-collection schemas cross the wire, never data,
   *                    merged on the driver in partition order → deterministic
   *                    authoritative order (existing-then-new, D9).
   *   pass 2  PARSE  — per collection: filter on the pre-extracted routing
-  *                    columns (cheap; no JSON re-parse) then full-parse the
-  *                    matching rows against the now-fixed StructType.
+  *                    columns (cheap; no JSON re-parse) then token-walk the
+  *                    matching rows against the now-fixed StructType,
+  *                    compiled once per partition (`JsonEventParser.ParsePlan`).
   *
-  * The raw batch is cached between passes, so the full JSON parse runs at
-  * most twice per record regardless of collection count — the same two-phase
+  * The raw batch is cached between passes, so the JSON walk runs at most
+  * twice per record regardless of collection count — the same two-phase
   * shape the reference uses (routing pre-pass + full parse, SURVEY §4).
   * Nothing here accumulates data on the driver: only schemas do.
   */
@@ -63,24 +67,14 @@ object JsonIngest {
       : (Map[CollectionId, StructType], Map[CollectionId, Long]) = {
     val spark = raw.sparkSession
     import spark.implicits._
-    // Per-partition: merge every event's inferred fields into one schema
-    // per collection, then emit (partitionId, project, collection,
-    // schemaJson, rows). Only schemas + counts cross the wire, never data.
+    // Per-partition: fold every event's fields into one schema per
+    // collection, then emit (partitionId, project, collection, schemaJson,
+    // rows). Only schemas + counts cross the wire, never data.
     val partial: Array[(Int, String, String, String, Long)] = raw.mapPartitions { it =>
-      val acc = scala.collection.mutable.LinkedHashMap.empty[CollectionId, (StructType, Long)]
-      it.foreach { json =>
-        JsonEventParser.inferEvent(json, dialect, names).foreach { case (id, fields) =>
-          val observed = StructType(fields.toSeq.map { case (n, ft) =>
-            StructField(n, ft.sparkType, nullable = true)
-          })
-          acc(id) = acc.get(id) match {
-            case Some((cur, n)) => (EventSchema.evolve(cur, observed), n + 1)
-            case None           => (observed, 1L)
-          }
-        }
-      }
+      val fold = new JsonEventParser.InferFold(dialect, names)
+      it.foreach(fold.add)
       val pid = org.apache.spark.TaskContext.getPartitionId()
-      acc.iterator.map { case (id, (st, n)) =>
+      fold.result.map { case (id, st, n) =>
         (pid, id.project, id.collection, st.json, n)
       }
     }.collect()
@@ -112,9 +106,8 @@ object JsonIngest {
       .select($"value").as[String]
     val enc = Encoders.row(schema)
     subset.mapPartitions { it =>
-      it.flatMap { json =>
-        JsonEventParser.parseEvent(json, dialect, schema, names).map(_._2)
-      }
+      val plan = new JsonEventParser.ParsePlan(schema, dialect, names)
+      it.map(plan.parse).filter(_ != null).map(values => new GenericRow(values): Row)
     }(enc)
   }
 
@@ -123,7 +116,7 @@ object JsonIngest {
     * tagging each output row with its routing columns so one partitioned
     * write can land the whole cohort (`EventSink.insertConsolidated`).
     * Per-record semantics are exactly [[parseCollection]]'s (the same
-    * `JsonEventParser.parseEvent` call against the same authoritative
+    * `JsonEventParser.ParsePlan` walk against the same authoritative
     * schema) — only the job structure changes: ONE scan of the cached
     * batch for C collections instead of C filtered scans, which is what
     * keeps the driver off the critical path at 10k live collections.
@@ -140,12 +133,11 @@ object JsonIngest {
     routed.select(col("value"), col("_project"), col("_collection"))
       .mapPartitions { it =>
         val m = membersB.value
-        it.flatMap { r =>
+        val plan = new JsonEventParser.ParsePlan(schema, dialect, names, tail = 2)
+        it.filter { r =>
           val p = r.getString(1); val c = r.getString(2)
-          if (p == null || c == null || !m((p, c))) Iterator.empty
-          else JsonEventParser.parseEvent(r.getString(0), dialect, schema, names)
-            .map(t => Row.fromSeq(t._2.toSeq :+ p :+ c)).iterator
-        }
+          p != null && c != null && m((p, c))
+        }.flatMap(parseRouted(plan, _))
       }(enc)
   }
 
@@ -165,13 +157,24 @@ object JsonIngest {
     val enc = Encoders.row(outSchema)
     routed.select(col("value"), col("_project"), col("_collection"))
       .mapPartitions { it =>
-        it.flatMap { r =>
-          val p = r.getString(1); val c = r.getString(2)
-          if (p == null || c == null) Iterator.empty
-          else JsonEventParser.parseEvent(r.getString(0), dialect, schema, names)
-            .map(t => Row.fromSeq(t._2.toSeq :+ p :+ c)).iterator
-        }
+        val plan = new JsonEventParser.ParsePlan(schema, dialect, names, tail = 2)
+        it.filter(r => r.getString(1) != null && r.getString(2) != null)
+          .flatMap(parseRouted(plan, _))
       }(enc)
+  }
+
+  /** One `(value, _project, _collection)` row through a plan with two tail
+    * slots: the parsed values followed by the routing columns.
+    */
+  private def parseRouted(plan: JsonEventParser.ParsePlan, r: Row): Option[Row] = {
+    val values = plan.parse(r.getString(0))
+    if (values == null) None
+    else {
+      val n = plan.schema.length
+      values(n) = r.getString(1)
+      values(n + 1) = r.getString(2)
+      Some(new GenericRow(values))
+    }
   }
 
   /** Full batch ingest: route → infer → evolve registry → per-collection

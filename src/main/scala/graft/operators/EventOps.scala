@@ -23,11 +23,13 @@ object EventOps {
 
   /** D10 — checkpoint-column injection: `_shard_time` constant per batch
     * (ref deserialization/PageReader.buildPage:55-81; the RLE block is
-    * Catalyst constant folding here — `current_timestamp()` is evaluated
-    * once per query, not per row).
+    * Catalyst constant folding here). `at` defaults to `current_timestamp()`,
+    * which Spark fixes per ACTION: a streaming batch passes one literal
+    * instant so every write and retry of the batch stamps the same time.
     */
-  def withShardTime(df: DataFrame, names: FieldNames = FieldNames()): DataFrame =
-    df.withColumn(names.checkpointField, current_timestamp())
+  def withShardTime(df: DataFrame, names: FieldNames = FieldNames(),
+                    at: Column = current_timestamp()): DataFrame =
+    df.withColumn(names.checkpointField, at)
 
   /** F2 (batch flavor) — exact duplicate drop on the reference's dedup key
     * `(_user, _time)` (ref kinesis/AvroDuplicateHandler.java:93-111).
@@ -80,9 +82,12 @@ object EventOps {
           else col("_graft_rest").getField(c).as(c)): _*)
   }
 
-  /** Result of the real-time/historical split (F4). */
+  /** Result of the real-time/historical split (F4). `historicalRows` is
+    * the size of `historical`, read off the day histogram: null-day rows
+    * plus out-of-window days that were not promoted.
+    */
   final case class DaySplit(realTime: DataFrame, historical: DataFrame,
-                            promotedDays: Set[Int])
+                            promotedDays: Set[Int], historicalRows: Long)
 
   /** F4 — real-time/historical day-split with the promotion heuristic
     * (ref kafka/KafkaRealTimeWorker.java:330-387):
@@ -96,7 +101,9 @@ object EventOps {
     * `timeCol` may be any timestamp column (pre-parse callers pass the
     * cheaply-extracted event time, see [[Decouple]]). The histogram is one
     * small aggregate over day indices (≤ thousands of distinct days), safe
-    * to collect.
+    * to collect. `today` defaults to `current_date()`, which Spark fixes per
+    * ACTION: a caller whose split spans several actions (the histogram, the
+    * hand-off, the real-time writes) passes one literal date instead.
     */
   def daySplit(df: DataFrame, timeCol: Column,
                today: Column = current_date(),
@@ -122,13 +129,19 @@ object EventOps {
         cnt > promoteMinRecords && total > 0 && cnt > promoteMinFraction * total => day
     }.toSet
 
+    val historicalRows = hist.collect {
+      case (day, cnt) if day == Int.MinValue ||
+        (!(day >= 0 && day <= outdatedDayIndex) && !promoted(day)) => cnt
+    }.sum
+
     val isRealTime =
       if (promoted.isEmpty) inWindow
       else inWindow || col("_day_idx").isin(promoted.toSeq: _*)
     DaySplit(
       realTime = tagged.filter(isRealTime).drop("_day_idx"),
       historical = tagged.filter(!isRealTime || col("_day_idx").isNull).drop("_day_idx"),
-      promotedDays = promoted)
+      promotedDays = promoted,
+      historicalRows = historicalRows)
   }
 
   /** Pre-parse routing+time extraction (the reference's DecoupleMessage,

@@ -250,6 +250,19 @@ object IngestStream {
       : Map[graft.schema.CollectionId, Long] = {
     import spark.implicits._
 
+    // ONE clock reading for the whole batch: `current_date()` and
+    // `current_timestamp()` are fixed per Spark ACTION, and this batch runs
+    // several (day histogram, hand-off, one write per collection, retries).
+    // Across midnight they could disagree on "today" — a record judged
+    // real-time by the hand-off and historical by the write would be
+    // neither handed off nor written — and `_shard_time` would differ
+    // between collections and retries.
+    val batchInstant = java.time.Instant.now()
+    val batchDay = java.time.LocalDate.ofInstant(batchInstant,
+      org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+        spark.conf.get("spark.sql.session.timeZone")))
+    val shardTime = lit(batchInstant)
+
     // pre-parse decouple (D-split reads only _time/_collection, ref
     // KafkaDecoupleMessage) + whitelist. A caller that already decoupled
     // (the dedup query feeds routing columns through the state op) passes
@@ -264,11 +277,14 @@ object IngestStream {
         if (!cfg.splitEnabled) decoupled
         else {
           val split = EventOps.daySplit(decoupled, col("_time"),
+            today = lit(batchDay),
             outdatedDayIndex = cfg.outdatedDayIndex,
             promoteMinRecords = cfg.promoteMinRecords,
             promoteMinFraction = cfg.promoteMinFraction)
-          // F5: hand historical records off INSIDE the barrier
-          historical.foreach(h => h.handle(split.historical))
+          // F5: hand historical records off INSIDE the barrier — only when
+          // the histogram counted any (an empty hand-off is a whole job)
+          if (split.historicalRows > 0)
+            historical.foreach(h => h.handle(split.historical))
           split.realTime
         }
 
@@ -342,7 +358,7 @@ object IngestStream {
           : Seq[(graft.schema.CollectionId, Long)] = {
         val df = JsonIngest.parseCollection(routed, id, schema,
           cfg.dialect, cfg.names)
-        val withCheckpoint = EventOps.withShardTime(df, cfg.names)
+        val withCheckpoint = EventOps.withShardTime(df, cfg.names, shardTime)
         try {
           // C4: job-level retry with backoff around the sink commit;
           // batch id flows through for sink-side idempotence. The
@@ -368,7 +384,7 @@ object IngestStream {
         val members = ids.map(id => (id.project, id.collection)).toSet
         val cohortDf = EventOps.withShardTime(
           JsonIngest.parseCohort(routed, members, schema, cfg.dialect, cfg.names),
-          cfg.names)
+          cfg.names, shardTime)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           // the counts job is the cohort's first materialization of the
